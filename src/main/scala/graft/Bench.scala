@@ -1,4 +1,5 @@
 package graft
+import graft.sources.GraftProvenance.esc
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: one JSON line with per-query wall times at the
@@ -30,9 +31,10 @@ object Bench {
     * the emitted JSON line overflow the harness's output tail buffer
     * (BENCH_r03 recorded `parsed: null` with the line truncated) and
     * spent 6 timed executions on sub-200ms lookups that say nothing
-    * about scale. The two dozen representative queries below keep the
-    * line compact and the signal per second high (the emitted JSON
-    * reports the actual count as `n_queries`).
+    * about scale. The representative queries below keep the signal
+    * per second high (the emitted JSON reports the count as
+    * `n_queries`); why each was added is recorded in the round reports
+    * (OPTIMIZATION_r*.md) and the git history.
     */
   private val Headline: Seq[String] = Seq(
     "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier_volume",
@@ -44,97 +46,34 @@ object Bench {
     "dedup_clusters_exact", "sim_ivf_topk", "text_tokens",
     "text_tfidf_top_terms", "text_fingerprint", "prof_orders_columns",
     "mm_feature_extract", "mm_resize",
-    // round-6 additions: the two heaviest of the new TPC-H topologies,
-    // the map-only repetition pass, the behavioral event-log passes,
-    // the copy-on-write merge, and the PQ compressed-scan ANN
     "q2_min_cost_supplier", "q21_waiting_suppliers", "text_repetition",
     "q_funnel_conversion", "q_scd2_user_status", "src_merge_upsert",
     "sim_pq_topk",
-    // round-7 additions: substring-level dedup (native span-hash scan +
-    // one count-distinct shuffle), the decontamination semi join, and
-    // the unigram-LM scorer (tokenize + count shuffle + word join)
     "dedup_substring", "text_decontaminate", "text_unigram_logprob",
-    // round-8 additions: BPE train (vocab-bounded) + encode scan, the
-    // cross-source span self-join, and split packing (window + explode)
     "text_bpe_tokens", "dedup_source_overlap", "pipeline_pack_split",
-    // round-8 late additions: SemDeDup (k-means + within-cluster pair
-    // join), DSIR weights (two-model word join), bloom-prefiltered
-    // fact join, and MMR re-rank over the shortlist cogroup
     "dedup_semantic", "text_dsir_weights", "q_bloom_semi_join",
     "sim_mmr_topk", "text_hash_embed", "pipeline_curriculum",
     "src_stats_table", "dedup_incremental",
-    // round-9 additions: the de-skewed global-order neighbor pass
-    // (range partition + zipWithIndex + index equi-join), the
-    // graph-ANN beam probe (routing-graph build + sliver scan), the
-    // incremental IVF absorb (index write + append + pruned serve),
-    // and the entity-resolution composite (linkage + CC + election)
     "dedup_sorted_neighborhood", "sim_hnsw_topk",
     "sim_ivf_incremental", "q_entity_resolution",
-    // round-9 late additions: footer-stats aggregate pushdown (a
-    // metadata-only pass — its cost IS the write+footer sweep), the
-    // MV rewrite round trip (build + rewritten scan), write-time CDF
-    // merge, and the bloom-index build + pruned point lookup
     "src_v2_agg_pushdown", "q_mv_rewrite", "src_change_feed",
     "src_bloom_index",
-    // round-9 final additions: the day-spine gap fill (spine join +
-    // packed-max window), the triple-scan unpivot aggregate, the
-    // row-level quarantine manifest, and filtered vector search
     "q_gap_fill", "q_unpivot", "q_quarantine", "sim_filtered_topk",
-    // round-10 additions: the write-audit-publish flow (stage + audit
-    // + publish + rejected-batch vacuum), the multimodal pair-
-    // curation funnel (span-hash decon + md5 dedup + quality gates),
-    // the cluster-keyed leakage-safe split (C6 CC + hash split), and
-    // the point-in-time feature snapshot (as-of + strict-prior windows)
     "src_wap_publish", "pipeline_curate_pairs",
     "pipeline_cluster_split", "q_feature_snapshot", "mm_token_budget",
     "pipeline_weighted_sample",
-    // round-11 additions: the Zipf-slope crawl diagnostic (tokenize +
-    // count shuffle + tree-reduced top-k + k-row regression), the
-    // packing-efficiency report (tokenize + two-level aggregate), and
-    // the ingestion-drift profile (tokenize + bucket aggregate +
-    // broadcast baseline join)
     "text_zipf_slope", "pipeline_pack_efficiency", "text_ingest_drift",
-    // round-11 late addition: the CCNet perplexity-tercile cut (cached
-    // unigram grain + bounded two-phase cutoff selection + assignment)
     "text_perplexity_buckets",
-    // round-11 final additions: merge-on-read mutation (tombstone
-    // epochs + anti-join read + affected-file compaction) and the
-    // five-stage curation funnel (C7 chain + survivor-trained
-    // perplexity cut)
     "src_mor_delete", "src_mor_upsert", "pipeline_curation_funnel",
-    // the A44 equality-delete lane (zero-read erase + forward mask)
-    // and the E23 persisted-classifier artifact (train + artifact
-    // scoring of the held-out half)
     "src_mor_erase", "text_quality_model",
-    // the A45 sequence-numbered equality upsert (two zero-read
-    // generations + an erase outranking a resurrection attempt) and
-    // the A46 incremental summary under mutation (build + 2 refreshes)
     "src_mor_upsert_eq", "src_mor_incremental_agg",
-    // the H14 seeded-shuffle keyed resume, the A48 footer-pruned
-    // retention sweep, and the A49 outbound change feed
     "pipeline_shuffle_resume", "src_retention_sweep",
     "src_mor_change_feed", "src_mor_sql_read",
-    // round-13 additions: SQL row-level DML (delta delete + update +
-    // merge through the v2 write path) and the mask-composed epoch
-    // read (publish + AS-OF with recorded sidecars)
     "src_mor_sql_dml", "src_mor_time_travel",
-    // round-14 additions: the materialized export of a masked epoch
-    // (mask-applied COW pass + foreign plain read), the ALTER
-    // DROP/RENAME declared rewrite (CTAS + two rewrites + read-back),
-    // and the declared z-order layout (CREATE + shaped INSERT + band
-    // read over the clustered table)
     "src_export_material", "src_sql_alter_rewrite", "src_sql_layout",
-    // the A65 declared-bucket tables + storage-partitioned join
-    // (CREATE ×2 + shaped INSERT ×2 + the zero-exchange join)
     "src_sql_bucket_join",
-    // round-15 additions: the stats-driven auto-broadcast join (v2
-    // SupportsReportStatistics), the (BIGINT, TIMESTAMP) zorder
-    // insert+band read, the two-column bucket grid SPJ, and the
-    // SQL-TVF IVF probe (index build + 5 pruned TVF reads)
     "src_sql_join_broadcast", "src_sql_layout_ts",
     "src_sql_bucket_join_multi", "sim_sql_topk",
-    // round-16 addition: the streaming table tail (build + publish ×2
-    // + two AvailableNow runs resuming one checkpoint)
     "stream_table_tail")
 
   private def median(xs: Seq[Double]): Double = {
@@ -149,12 +88,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // JVM/codegen warm-up on the tiny sf so first-timed query is not
     // charged for JIT + Spark infra startup.
     SparkEntry.entry(spark).count()
@@ -264,19 +198,12 @@ object Bench {
       s""""failed":${failed.size},"failed_queries":$failedJson,""" +
       s""""noise":${fmt(noise)},"noisy":${noise > NoiseGate},""" +
       s""""floor_ratio":$floorJson,"floor_regressed":$regressedJson,""" +
-      s""""sf":"$sfDir","runs_per_query":$Runs,"agg":"median",""" +
+      s""""sf":"${esc(sfDir)}","runs_per_query":$Runs,"agg":"median",""" +
       s""""headline_only":true,"n_queries":${bench.size}}"""
     println(fullLine)
-    // The full line above (per-query seconds + per-query floor ratios,
-    // ~89 keys each) is ~5 KB — longer than a consumer that keeps only
-    // a bounded stdout TAIL can hold, so its FRONT (metric/value) gets
-    // truncated away (BENCH_r15/r16 both recorded `parsed: null` for
-    // exactly this reason). Contract repair, r17: (a) the full line is
-    // ALSO written verbatim to BENCH_detail.json so per-query numbers
-    // survive with no stdout limits, and (b) a SHORT summary line —
-    // guaranteed to fit a 2 KB tail whole — is printed LAST. Nothing
-    // about the measurement methodology changes; the long line keeps
-    // every key it ever had.
+    // The full line (~5 KB) overflows a consumer that keeps only a
+    // bounded stdout tail, so it also goes to BENCH_detail.json and a
+    // short summary line is printed last (see OPTIMIZATION_r17.md).
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_detail.json")
     try {
       val w = new java.io.PrintWriter(detailPath, "UTF-8")
@@ -287,9 +214,9 @@ object Bench {
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
       s""""failed":${failed.size},"failed_queries":$failedJson,""" +
       s""""noise":${fmt(noise)},"noisy":${noise > NoiseGate},""" +
-      s""""floor_regressed":$regressedJson,"sf":"$sfDir",""" +
+      s""""floor_regressed":$regressedJson,"sf":"${esc(sfDir)}",""" +
       s""""runs_per_query":$Runs,"agg":"median","headline_only":true,""" +
-      s""""n_queries":${bench.size},"detail":"$detailPath"}""")
+      s""""n_queries":${bench.size},"detail":"${esc(detailPath)}"}""")
     spark.stop()
   }
 }

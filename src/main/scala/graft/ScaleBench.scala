@@ -521,12 +521,7 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val smallDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val bigDir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft_benchdata/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     ensureScaled(spark, smallDir, bigDir)
     SparkEntry.entry(spark).count() // JIT warm-up
 

@@ -539,6 +539,8 @@ case class DotProductExpr(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
+  // NULL on length mismatch even when both inputs are non-nullable
+  override def nullable: Boolean = true
   override def prettyName: String = "dot_product"
 
   def compute(a: ArrayData, b: ArrayData): java.lang.Double = {
@@ -687,14 +689,19 @@ case class NearestCentroidExpr(child: Expression,
   *   aggregate(zip_with(tables, codes, (t, c) => element_at(t, c+1)),
   *             0.0, +)
   * (per corpus×query row in the PQ compressed scan). Same 1-based
-  * element_at addressing, same left-to-right accumulation; mirrors the
-  * HOF's null semantics (length mismatch, null entry or an
-  * out-of-range code yields NULL).
+  * element_at addressing, same left-to-right accumulation. Length
+  * mismatch or a null entry yields NULL in both. Parity with the HOF
+  * holds only for codes ≥ 0 (the PQ encoder emits 0 ≤ c < ksub): any
+  * out-of-range code yields NULL here, while the HOF throws on c = -1
+  * (`element_at(t, 0)`), indexes from the end for c < -1, and throws
+  * past the end under ANSI mode.
   */
 case class AdcScoreExpr(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
+  // NULL on length mismatch or a bad code even for non-nullable inputs
+  override def nullable: Boolean = true
   override def prettyName: String = "adc_score"
 
   def compute(tables: ArrayData, codes: ArrayData): java.lang.Double = {

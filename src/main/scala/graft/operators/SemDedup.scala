@@ -84,10 +84,11 @@ object SemDedup {
 
   /** Lloyd-ROUND flavor: the centroid table rides as a one-row
     * broadcast LocalRelation instead of a per-round plan literal, so
-    * the round plan's text — and its codegen — is round-invariant
-    * (the Similarity.assignCentroidsRound story). Integer-exact
-    * arithmetic makes the result provably identical; the baked
-    * Sf001Centroids spec guards it anyway.
+    * the round plan's text — and its codegen — is round-invariant: a
+    * literal embeds k×dim values in the expression tree, and every
+    * round would analyze, optimize and compile a fresh plan.
+    * Integer-exact arithmetic makes the result provably identical;
+    * the baked Sf001Centroids spec guards it anyway.
     */
   private[graft] def assignNearestRound(e: DataFrame,
       centroids: Seq[(Int, Seq[Long])]): DataFrame = {

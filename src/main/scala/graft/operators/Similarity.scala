@@ -116,60 +116,11 @@ object Similarity {
     // former literal-array HOF form — array_max over transform(cents,
     // struct(score, -id)) — interpreted one boxed struct per centroid
     // per row; bit-identity with it (scores, NaN/-0.0 ordering, ties
-    // to smallest id) is spec-asserted on the real corpus. Kept as
-    // [[assignCentroidsHof]] for that spec and for the Lloyd-round
-    // column-carrier path.
+    // to smallest id) is spec-asserted on the real corpus against the
+    // test-scope HOF reference.
     e.withColumn("centroid_id", Bridge.column(NearestCentroidExpr(
       Bridge.expression(col("emb")),
       centroids.map(_._1), centroids.map(_._2.toArray), useCosine)))
-
-  /** The HOF twin of [[assignCentroids]] — the spec's bit-identity
-    * reference, and the shape the broadcast-carrier Lloyd rounds use
-    * (there the centroid table is a COLUMN, which a driver-side-table
-    * native expression cannot consume).
-    */
-  private[graft] def assignCentroidsHof(
-      e: DataFrame, centroids: Array[(Int, Seq[Double])],
-      score: (Column, Column) => Column = VectorFns.cosine(_, _)): DataFrame =
-    e.withColumn("centroid_id",
-      argmaxCentroid(typedlit(centroids.toSeq), score))
-
-  /** The per-row argmax over a centroid-array COLUMN (either a literal
-    * or a broadcast-joined attribute — the expression, and therefore
-    * the per-row float arithmetic, is identical either way). */
-  private def argmaxCentroid(cArr: Column,
-      score: (Column, Column) => Column): Column = {
-    val best = array_max(transform(cArr, c =>
-      struct(score(col("emb"), c.getField("_2")).as("cos"),
-        (-c.getField("_1")).as("nid"))))
-    (-best.getField("nid")).cast("int")
-  }
-
-  /** Lloyd-ROUND flavor of the map-side argmax: the per-round centroid
-    * table rides as a ONE-ROW broadcast LocalRelation (data in the
-    * broadcast, not a literal in the plan) crossJoined onto the input.
-    * A `typedlit` embeds k×dim doubles in the expression tree, so
-    * every round analyzed, optimized and CODEGEN-COMPILED a fresh plan
-    * (~0.15 s/round measured on sim_pq_topk — the whole training cost
-    * at sf0.1); as data, the plan text is round-invariant and the
-    * codegen cache hits from round 2 on. Per-row arithmetic is the
-    * SAME expression over the same values in the same partition order
-    * (BroadcastNestedLoopJoin with one row preserves left partitions
-    * and order), so results are bit-identical — spec-asserted against
-    * the literal path. The FINAL full-corpus assignment keeps the
-    * literal form: it runs once, and zero-join map-side assignment is
-    * the at-scale story documented on assignCentroids.
-    */
-  private[graft] def assignCentroidsRound(
-      e: DataFrame, centroids: Array[(Int, Seq[Double])],
-      score: (Column, Column) => Column = VectorFns.cosine(_, _)): DataFrame = {
-    val s = e.sparkSession
-    import s.implicits._
-    val cents = Seq(Tuple1(centroids.toSeq)).toDF("__cents")
-    e.crossJoin(broadcast(cents))
-      .withColumn("centroid_id", argmaxCentroid(col("__cents"), score))
-      .drop("__cents")
-  }
 
   /** L2 flavor of the map-side argmax (PQ subspace codebooks): same
     * zero-shuffle shape, maximizing the NEGATED squared distance.
@@ -177,6 +128,19 @@ object Similarity {
   private[graft] def assignCentroidsL2(
       e: DataFrame, centroids: Array[(Int, Seq[Double])]): DataFrame =
     assignCentroids(e, centroids, useCosine = false)
+
+  /** Lloyd-round code assignment for [[trainSubspaceCodebooks]]: adds
+    * `code`, the nearest (L2) centroid of each row's `emb` in the
+    * codebook its `sub` selects (SubspaceNearestExpr). The codebooks
+    * ride the codegen references array, so the round plan's generated
+    * code is round-invariant (codegen cache hits) and the argmin is
+    * one primitive loop.
+    */
+  private[graft] def assignSubspaces(e: DataFrame,
+      books: Array[Array[(Int, Seq[Double])]]): DataFrame =
+    e.withColumn("code", Bridge.column(graft.functions.SubspaceNearestExpr(
+      Bridge.expression(col("emb")), Bridge.expression(col("sub")),
+      books.map(_.map(_._1)), books.map(_.map(_._2.toArray)))))
 
   /** Lloyd's k-means over a (sampled) embedding table: deterministic
     * init (k lowest vec_ids present in the input), `iters`
@@ -194,8 +158,7 @@ object Similarity {
       // the centroid table rides the codegen references array, so the
       // per-round generated code is round-invariant (codegen cache
       // hits) AND the per-row argmax is one primitive loop. Injectable
-      // so the spec can assert bit-identity vs the HOF literal AND the
-      // HOF broadcast-carrier forms.
+      // so the spec can assert bit-identity vs the HOF literal form.
       assign: (DataFrame, Array[(Int, Seq[Double])]) => DataFrame =
         assignCentroids(_, _)): Array[(Int, Seq[Double])] = {
     import e.sparkSession.implicits._
@@ -946,19 +909,20 @@ object Similarity {
     */
   /** Trains the M per-subspace PQ codebooks JOINTLY: the training
     * sample explodes once to (vec_id, sub, subvector) and each Lloyd
-    * round assigns every row against its own subspace's codebook — a
-    * literal array-of-codebooks indexed by `sub`, still the map-side
-    * argmin shape — then re-means per (sub, centroid, dim) in one
-    * shuffle. One job per round for ALL subspaces. Deterministic
+    * round assigns every row against its own subspace's codebook
+    * ([[assignSubspaces]], still the map-side argmin shape) — then
+    * re-means per (sub, centroid, dim) in one shuffle. One job per
+    * round for ALL subspaces. Deterministic
     * init (k lowest sample vec_ids seed every subspace, same rule as
     * kmeansCentroids); an empty cluster keeps its previous centroid.
     */
   private[graft] def trainSubspaceCodebooks(e: DataFrame, m: Int, subDim: Int,
       ksub: Int, iters: Int,
-      // rounds default to the broadcast-LocalRelation codebook carrier
-      // (codegen-cacheable plan text — the assignCentroidsRound story);
-      // the literal path stays injectable for the bit-identity spec
-      literalRounds: Boolean = false): Array[Array[(Int, Seq[Double])]] = {
+      // rounds default to the NATIVE per-subspace argmin; injectable
+      // (as in kmeansCentroids) so the spec can assert bit-identity vs
+      // the HOF literal form
+      assign: (DataFrame, Array[Array[(Int, Seq[Double])]]) => DataFrame =
+        assignSubspaces(_, _)): Array[Array[(Int, Seq[Double])]] = {
     import e.sparkSession.implicits._
     val sub = trainingSample(e).select(col("vec_id"),
       explode(array((0 until m).map(mi =>
@@ -977,24 +941,7 @@ object Similarity {
           .map { case ((_, _, v), i) => (i, v) }
       }
       for (_ <- 0 until iters) {
-        // default: NATIVE per-subspace argmin (SubspaceNearestExpr) —
-        // the codebooks ride the codegen references array, so the
-        // round plan's generated code is round-invariant (codegen
-        // cache hits) and the argmin is one primitive loop. The
-        // literal HOF form stays reachable as the spec's bit-identity
-        // reference: same negL2 arithmetic, same (score, -id) order.
-        val code: Column =
-          if (literalRounds) {
-            val bookArr = typedlit(books.map(_.toSeq).toSeq)
-            val best = array_max(transform(element_at(bookArr, col("sub") + 1), c =>
-              struct((-VectorFns.l2sq(col("emb"), c.getField("_2"))).as("nd"),
-                (-c.getField("_1")).as("nid"))))
-            (-best.getField("nid")).cast("int")
-          } else Bridge.column(graft.functions.SubspaceNearestExpr(
-            Bridge.expression(col("emb")), Bridge.expression(col("sub")),
-            books.map(_.map(_._1)), books.map(_.map(_._2.toArray))))
-        val updated = sub
-          .withColumn("code", code)
+        val updated = assign(sub, books)
           .select(col("sub"), col("code"), posexplode(col("emb")).as(Seq("dim", "v")))
           .groupBy("sub", "code", "dim").agg(avg("v").as("mn"))
           .groupBy("sub", "code")
@@ -1048,8 +995,8 @@ object Similarity {
     val e = withNormalized(emb(s, dir)).grainCache()
     // per-subspace L2 codebooks, trained on the ~10% hash sample —
     // ALL subspaces per Lloyd round in ONE job (rows exploded to
-    // (vec_id, sub, subvector), codebook looked up per-row from a
-    // literal array-of-codebooks): 1 init + `iters` jobs total
+    // (vec_id, sub, subvector), codebook selected per-row by `sub`):
+    // 1 init + `iters` jobs total
     // instead of m×(1+iters) sequential tiny jobs, which at 31-query
     // bench granularity is the difference between a ~1s and a ~5s
     // training phase.

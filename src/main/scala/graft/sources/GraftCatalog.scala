@@ -604,7 +604,7 @@ final class GraftCatalog(spark: SparkSession, root: String) {
           "first")
     val (_, files) = readManifest(name, id)
     val schemaDdl = tableAsOf(name, id).schema.toDDL
-    def esc(v: String) = v.replace("\\", "\\\\").replace("\"", "\\\"")
+    import GraftProvenance.esc
     val json =
       s"""{"table":"${esc(name)}","epoch":$id,""" +
         s""""schema":"${esc(schemaDdl)}",""" +
@@ -644,7 +644,7 @@ final class GraftCatalog(spark: SparkSession, root: String) {
     val files = fs.listStatus(p).toSeq.map(_.getPath)
       .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
       .map(_.toString).sorted
-    def esc(v: String) = v.replace("\\", "\\\\").replace("\"", "\\\"")
+    import GraftProvenance.esc
     val json =
       s"""{"table":"${esc(name)}","epoch":$id,"materialized":true,""" +
         s""""schema":"${esc(df.schema.toDDL)}",""" +

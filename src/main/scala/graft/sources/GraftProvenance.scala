@@ -48,7 +48,11 @@ object GraftProvenance {
         _.getFooter.getBlocks.asScala.map(_.getRowCount).sum)
     }.sum
 
-  private def esc(x: String): String = x.flatMap {
+  /** The one JSON string-body escaper of graft's hand-written JSON:
+    * quote, backslash and every control character (< 0x20), so any
+    * string value yields valid JSON.
+    */
+  private[graft] def esc(x: String): String = x.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"

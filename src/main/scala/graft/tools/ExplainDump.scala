@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Measurement tool (optimization rounds): dump `.explain("formatted")`
   * for named SparkEntry queries into an output directory, one
   * `<name>.txt` per query — the plan evidence committed under
@@ -19,12 +17,7 @@ object ExplainDump {
     val names: Seq[String] =
       if (args(2) == "all") graft.SparkEntry.queries.keys.toSeq.sorted
       else args(2).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (n <- names) {
       graft.SparkEntry.queries.get(n) match {

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Measurement tool (optimization rounds): run one SparkEntry query
   * with a job-level listener and print, for the TIMED (post-warmup)
@@ -15,12 +14,7 @@ object ProfileQuery {
     val sfDir = args(0)
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val fn = graft.SparkEntry.queries(name)
 
     case class J(id: Int, desc: String, start: Long, var end: Long = 0L,

@@ -1,14 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One-shot regeneration helper for SemDedup.Sf001Centroids. */
 object RegenSemDedup {
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", false)
-      .appName("regen-semdedup").getOrCreate()
+    val s = graft.GraftSession.local(8)
     graft.operators.SemDedup.printSf001Centroids(s, "/root/testdata/sf0.01")
     s.stop()
   }

@@ -27,19 +27,46 @@ class CacheSweepSpec extends SparkSpecBase {
     "text_quality_classifier", "text_dsir_weights",
     "text_decontaminate_semantic")
 
-  test("source lint: no raw .cache() in the operator surface — every grain routes through grainCache()") {
-    val opDir = new java.io.File("src/main/scala/graft/operators")
-    assume(opDir.isDirectory, "source tree not available")
-    val offenders = opDir.listFiles().filter(_.getName.endsWith(".scala"))
+  /** `file:line: text` of each non-comment line in the `.scala` files
+    * under `dir` (recursively) that `bad` flags, skipping `allowed`
+    * file names.
+    */
+  private def sourceLint(dir: String, allowed: Set[String] = Set.empty)(
+      bad: String => Boolean): Seq[String] = {
+    val root = new java.io.File(dir)
+    assume(root.isDirectory, "source tree not available")
+    def files(d: java.io.File): Seq[java.io.File] = d.listFiles().toSeq
+      .flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    files(root).filter(f => f.getName.endsWith(".scala") && !allowed(f.getName))
       .flatMap { f =>
         val src = scala.io.Source.fromFile(f, "UTF-8")
         try src.getLines().zipWithIndex.collect {
-          case (l, i) if l.contains(".cache()") && !l.trim.startsWith("//") =>
+          case (l, i) if bad(l) && !l.trim.startsWith("//") =>
             s"${f.getName}:${i + 1}: $l"
         }.toList finally src.close()
       }
+  }
+
+  test("source lint: no raw .cache() in the operator surface — every grain routes through grainCache()") {
+    val offenders = sourceLint("src/main/scala/graft/operators")(_.contains(".cache()"))
     assert(offenders.isEmpty,
       "raw .cache() re-opens the unreleased-grain leak; use grainCache():\n" +
+        offenders.mkString("\n"))
+  }
+
+  test("source lint: GraftSession is the only session builder in the main source") {
+    val offenders = sourceLint("src/main", allowed = Set("GraftSession.scala"))(
+      _.contains("SparkSession.builder"))
+    assert(offenders.isEmpty,
+      "harnesses build their session with GraftSession.local:\n" +
+        offenders.mkString("\n"))
+  }
+
+  test("source lint: HOF bit-identity references live in src/test, not the main source") {
+    val hofDef = """def \w+Hof\b""".r
+    val offenders = sourceLint("src/main")(l => hofDef.findFirstIn(l).isDefined)
+    assert(offenders.isEmpty,
+      "move reference-only HOF twins to HofReferences in src/test:\n" +
         offenders.mkString("\n"))
   }
 

@@ -8,6 +8,13 @@ import org.apache.spark.sql.functions._
   */
 class ProvenanceSpec extends SparkSpecBase {
 
+  test("the JSON escaper round-trips quotes, backslashes and control characters through Jackson") {
+    val v = "say \"hi\" at C:\\tmp\nnext line\ttab\r\u0001"
+    val line = s"""{"sf":"${GraftProvenance.esc(v)}"}"""
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(parsed.get("sf").asText() === v)
+  }
+
   test("write records inputs/rows/schema; check detects layout drift; rewrite heals") {
     import spark.implicits._
     val out = graft.sources.GraftSink.scratchDir + "/spec_prov"

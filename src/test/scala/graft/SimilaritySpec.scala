@@ -226,14 +226,14 @@ class SimilaritySpec extends SparkSpecBase {
     assert(got === 1)
   }
 
-  test("Lloyd rounds with the broadcast codebook carrier are bit-identical to the literal plan") {
+  test("native Lloyd-round assignment is bit-identical to the literal HOF plan") {
     import graft.sources.GraftCatalog
     // single partition: the claim under test is EXPRESSION identity
-    // (broadcast-carried centroid arrays evaluate the same arithmetic
-    // as plan literals). One input partition pins the only other
+    // (the native round assignment evaluates the same arithmetic as the
+    // HOF over plan literals). One input partition pins the only other
     // degree of freedom — float merge order of avg() partials across
     // shuffle fetch arrival — so any bit difference here is the
-    // carrier's fault, not the shuffle's.
+    // assignment's fault, not the shuffle's.
     val e = new GraftCatalog(spark, sfDir).table("embeddings")
       .select(col("vec_id"), VectorFns.toDoubleArray(col("embedding")).as("emb"))
       .coalesce(1)
@@ -241,24 +241,20 @@ class SimilaritySpec extends SparkSpecBase {
       cs.toVector.map { case (i, v) =>
         (i, v.toVector.map(java.lang.Double.doubleToRawLongBits)) }
     val sample = Similarity.trainingSample(e)
-    // three round-assignment carriers must train identical centroids:
-    // the HOF literal plan (reference), the HOF one-row broadcast
-    // carrier, and the default native expression
+    // k-means: the default native expression vs the HOF literal plan
     val viaLiteral = Similarity.kmeansCentroids(sample, k = 6, iters = 2,
-      assign = Similarity.assignCentroidsHof(_, _))
-    val viaBroadcast = Similarity.kmeansCentroids(sample, k = 6, iters = 2,
-      assign = Similarity.assignCentroidsRound(_, _))
+      assign = HofReferences.assignCentroidsHof(_, _))
     val viaNative = Similarity.kmeansCentroids(sample, k = 6, iters = 2)
-    assert(bits(viaLiteral) === bits(viaBroadcast))
     assert(bits(viaLiteral) === bits(viaNative))
-    // PQ subspace codebooks, same invariant via the literalRounds flag
+    // PQ subspace codebooks, same invariant via the same seam
     val e2 = e.withColumn("nemb", col("emb"))
     val viaLitBooks = Similarity.trainSubspaceCodebooks(
-      e2, m = 4, subDim = 16, ksub = 8, iters = 2, literalRounds = true)
-    val viaBcBooks = Similarity.trainSubspaceCodebooks(
+      e2, m = 4, subDim = 16, ksub = 8, iters = 2,
+      assign = HofReferences.assignSubspacesHof(_, _))
+    val viaNativeBooks = Similarity.trainSubspaceCodebooks(
       e2, m = 4, subDim = 16, ksub = 8, iters = 2)
-    assert(viaLitBooks.length === viaBcBooks.length)
-    viaLitBooks.zip(viaBcBooks).foreach { case (a, b) =>
+    assert(viaLitBooks.length === viaNativeBooks.length)
+    viaLitBooks.zip(viaNativeBooks).foreach { case (a, b) =>
       assert(bits(a) === bits(b))
     }
   }
@@ -273,7 +269,7 @@ class SimilaritySpec extends SparkSpecBase {
         java.lang.Double.doubleToRawLongBits(r.getDouble(1)))).sortBy(_._1).toVector
     // dot: native vs aggregate(zip_with) — same accumulation order
     val dotN = lbits(e.select(col("vec_id"), VectorFns.dot(col("emb"), col("emb"))))
-    val dotH = lbits(e.select(col("vec_id"), VectorFns.dotHof(col("emb"), col("emb"))))
+    val dotH = lbits(e.select(col("vec_id"), HofReferences.dotHof(col("emb"), col("emb"))))
     assert(dotN === dotH)
     // normalize: native one-loop vs the hoisted-norm HOF chain
     def abits(df: org.apache.spark.sql.DataFrame) =
@@ -298,9 +294,9 @@ class SimilaritySpec extends SparkSpecBase {
       df.select("vec_id", "centroid_id").collect()
         .map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1).toVector
     assert(ibits(Similarity.assignCentroids(e, cents)) ===
-      ibits(Similarity.assignCentroidsHof(e, cents)))
+      ibits(HofReferences.assignCentroidsHof(e, cents)))
     assert(ibits(Similarity.assignCentroids(e, cents, useCosine = false)) ===
-      ibits(Similarity.assignCentroidsHof(e, cents,
+      ibits(HofReferences.assignCentroidsHof(e, cents,
         (a, b) => -VectorFns.l2sq(a, b))))
     // ADC lookup-sum: native vs aggregate(zip_with(element_at))
     val tabs = Seq(Seq(0.25, -1.5, 3.0), Seq(2.0, 0.125, -7.0))
@@ -314,6 +310,27 @@ class SimilaritySpec extends SparkSpecBase {
       aggregate(zip_with(typedlit(tabs), col("codes"),
         (t, c) => element_at(t, c + 1)), lit(0.0), (acc, x) => acc + x)))
     assert(adcN === adcH)
+  }
+
+  test("native dot and ADC are nullable and return NULL on a length mismatch, even for non-nullable inputs") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType}
+    import graft.functions.{AdcScoreExpr, DotProductExpr}
+    // typed non-null array literals (what typedlit resolves to)
+    val dbl = ArrayType(DoubleType, containsNull = false)
+    val a = Literal.create(Seq(1.0, 2.0), dbl)
+    val b = Literal.create(Seq(1.0, 2.0, 3.0), dbl)
+    val tabs = Literal.create(Seq(Seq(0.5, 1.5)), ArrayType(dbl, containsNull = false))
+    val codes = Literal.create(Seq(0, 1), ArrayType(IntegerType, containsNull = false))
+    assert(!a.nullable && !b.nullable && !tabs.nullable && !codes.nullable)
+    for (e <- Seq(DotProductExpr(a, b), AdcScoreExpr(tabs, codes))) {
+      assert(e.nullable, s"${e.prettyName} must declare nullable")
+      // compiled directly: the optimizer would constant-fold the literals
+      val row = GenerateUnsafeProjection.generate(Seq(e)).apply(InternalRow.empty)
+      assert(row.isNullAt(0), s"${e.prettyName} codegen must yield NULL")
+    }
   }
 
   test("label centroids are exact integers and invariant to partition layout") {
